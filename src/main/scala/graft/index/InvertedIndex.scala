@@ -414,20 +414,6 @@ object InvertedIndex {
   def buildRegistry(spark: SparkSession, src: Dataset[CodeFile], cfg: IndexConfig): Dataset[DocRow] =
     buildRegistry(spark, src, cfg, docIdPlan(spark, src.toDF(), cfg.partitions, cfg.docIdBase))
 
-  /** SPIMI invert + block encode, straight from the SOURCE table (the docs
-    * table no longer stores content): (docId, content) pairs come from the
-    * same deterministic assignment the registry used ([[withDocIds]]), so
-    * the whole build moves content through exactly ONE exchange — this
-    * stage's token shuffle. The per-document tf map needs no shuffle (a
-    * document is one row); heavy terms are pre-split by docId RANGE so
-    * salted runs concatenate in docId order and need no second merge pass
-    * (the blockId encodes (salt, position), monotone in docId).
-    */
-  def buildPostings(spark: SparkSession, src: Dataset[CodeFile], stats: CorpusStats,
-      cfg: IndexConfig): Dataset[PostingBlock] =
-    buildPostingsSlice(spark, src, stats, cfg, heavyTerms(spark, src, cfg), 0, 1,
-      docIdPlan(spark, src.toDF(), cfg.partitions, cfg.docIdBase))
-
   /** Salting plan: the heavy-term map from ONE deterministic sampled narrow
     * scan of the source — term counts need no docIds. (An earlier design
     * also derived token-mass quantile boundaries here and exchanged on an
@@ -455,7 +441,16 @@ object InvertedIndex {
       }.toMap
   }
 
-  /** One docId-contiguous slice of the postings build (slice = a range of
+  /** SPIMI invert + block encode, straight from the SOURCE table (the docs
+    * table does not store content): (docId, content) pairs come from the
+    * same deterministic assignment the registry used ([[withDocIds]]), so
+    * the whole build moves content through exactly ONE exchange — this
+    * stage's token shuffle. The per-document tf map needs no shuffle (a
+    * document is one row); heavy terms are pre-split by docId RANGE so
+    * salted runs concatenate in docId order and need no second merge pass
+    * (the blockId encodes (salt, position), monotone in docId).
+    *
+    * One call builds one docId-contiguous slice (slice = a range of
     * registry pids, which IS a docId range because docIds are
     * offset(pid) + local). The pre-shuffle pid predicate prunes excluded
     * rows at the source scan, so slice cost is proportional to slice size.

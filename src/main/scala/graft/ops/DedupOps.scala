@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** Deduplication operators for training-data pipelines: exact (hash-groupBy),
   * MinHash+LSH banding, n-gram Jaccard verification, SimHash.
@@ -281,6 +282,12 @@ object DedupOps {
   def nearDupClusters(pairs: DataFrame, maxRounds: Int = 20,
       driverMaxEndpoints: Long = CcDriverMaxEndpoints): DataFrame = {
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
+    for (c <- Seq("a", "b")) {
+      val t = pairs.schema.find(_.name == c).map(_.dataType)
+      require(t.exists(Seq(ByteType, ShortType, IntegerType, LongType).contains),
+        s"nearDupClusters: pair column '$c' must be integral (ids are cast to " +
+          s"long, the doc_id grain); got ${t.getOrElse("no such column")} — map ids first")
+    }
     val spark = pairs.sparkSession
     import spark.implicits._
     val sc = spark.sparkContext
@@ -391,10 +398,15 @@ object DedupOps {
     // session leaving them pinned would crowd the storage region
     edgeRaw.unpersist(false)
     edges.unpersist(false)
+    if (!converged) labels.unpersist(false)
     require(converged, s"label propagation did not converge in $maxRounds rounds")
-    spark.createDataset(labels).toDF("doc_id", "cluster")
+    // materialize the output, then release the last round's labels too:
+    // the checkpoint cuts the lineage, so nothing re-reads them
+    val out = spark.createDataset(labels).toDF("doc_id", "cluster")
       .select(col("doc_id"), col("cluster"),
         (col("doc_id") === col("cluster")).as("canonical"))
-      .orderBy("cluster", "doc_id")
+      .localCheckpoint(eager = true)
+    labels.unpersist(false)
+    out.orderBy("cluster", "doc_id")
   }
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 
 /** Scan-parallelism guard for CPU-bound narrow pipelines (tokenize / md5 /
   * shingle streams): Spark sizes scan splits by BYTES (`maxPartitionBytes`
@@ -23,10 +23,5 @@ object Par {
   def fanOut(df: DataFrame): DataFrame = {
     val par = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < par) df.repartition(par) else df
-  }
-
-  def fanOutDs[T](ds: Dataset[T]): Dataset[T] = {
-    val par = ds.sparkSession.sparkContext.defaultParallelism
-    if (ds.rdd.getNumPartitions < par) ds.repartition(par) else ds
   }
 }

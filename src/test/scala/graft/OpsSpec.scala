@@ -34,6 +34,10 @@ class OpsSpec extends SparkSpec {
     assert(pairs.contains((0L, 5L)), s"exact dup pair missing: $pairs")
     assert(pairs.contains((0L, 1L)) && pairs.contains((1L, 5L)), s"near-dup pair missing: $pairs")
     assert(!pairs.exists(p => p._1 == 4L || p._2 == 4L), s"unrelated doc paired: $pairs")
+    // clustering those pairs needs integral ids: a string id fails at the call
+    val e = intercept[IllegalArgumentException](
+      DedupOps.nearDupClusters(Seq(("x", "y", 0)).toDF("a", "b", "dist")))
+    assert(e.getMessage.contains("must be integral"), e.getMessage)
   }
 
   test("exact jaccard values are right (n-gram path)") {
